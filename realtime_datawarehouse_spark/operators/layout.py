@@ -16,6 +16,8 @@ shuffle).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -43,6 +45,12 @@ def write_bucketed(
 
 def read_table(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
+
+
+def _size_estimate(df: DataFrame) -> int:
+    """The optimizer's sizeInBytes estimate for ``df``'s plan."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(str(stats.sizeInBytes()))
 
 
 def rebalance_narrow_scan(
@@ -79,18 +87,15 @@ def rebalance_narrow_scan(
     """
     if min_bytes:
         try:
-            est = int(
-                str(
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            if est < min_bytes:
+            if _size_estimate(df) < min_bytes:
                 return df
-        except Exception:
-            pass  # no estimate → fall through to the partition-count rule
+        except Exception as exc:
+            # no estimate → fall through to the partition-count rule
+            warnings.warn(
+                "rebalance_narrow_scan: no size estimate "
+                f"({type(exc).__name__}: {exc}); using the partition count",
+                stacklevel=2,
+            )
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -43,15 +43,30 @@ DEFAULT_WATERMARK = "3 seconds"  # W2/W3 bounded out-of-orderness
 DAY_TTL_WATERMARK = "26 hours"
 
 
-def parquet_stream(spark, path: str, schema: StructType, max_files: int = 1) -> DataFrame:
-    """File-based stream (one micro-batch per file with max_files=1) — the
-    test-rig stand-in for a Kafka topic; swap sources/kafka.read_stream in
-    production wiring."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
+def parquet_stream(
+    spark, path: str, schema: StructType | str, max_files: int | None = 1
+) -> DataFrame:
+    """File-based stream — the test-rig stand-in for a Kafka topic; swap
+    sources/kafka.read_stream in production wiring.
+
+    ``max_files=1`` (the default) makes one micro-batch per file, in
+    file order. ``max_files=None`` drops the cap: each trigger takes
+    every file committed since the last one. The file source lists a
+    sink directory through its ``_spark_metadata`` log, so an uncapped
+    trigger always consumes whole upstream commits. Boundaries written by
+    a stateful (shuffling) query use it: such a sink commits one file per
+    shuffle partition, and capped at one file the first file of a commit
+    moves the watermark past the rest of it (their rows are dropped as
+    late) while every file costs a trigger of its own. Boundaries that
+    feed a keep-the-first dedup stay at one file: an uncapped trigger
+    scans the files of several backlogged commits largest first, not in
+    commit order, so a later row could win. They are written by a
+    stateless query, one file per commit, so one file is one commit.
+    """
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(path)
 
 
 def tumble_count_by_key(
@@ -93,8 +108,9 @@ def first_per_user_day(
     NOTE: within a micro-batch, "first" is arrival order — byte-identical to
     the reference's processing semantics, but only equal to the batch
     oracle's min-timestamp row when the source is time-ordered (Kafka per
-    key, or file batches in order), which both the fixture and topic_db are
-    (pinned by test_first_per_user_day_disorder_contract).
+    key, or file batches read one per trigger in order), which both the
+    fixture and topic_db are (pinned by
+    test_first_per_user_day_disorder_contract).
     """
     return ev.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         [key, "visit_date"]

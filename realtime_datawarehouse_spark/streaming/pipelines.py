@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -2064,26 +2065,13 @@ def streaming_corpus_ingest(
 # carries one row per (mid, visit day) — the upsert-free append contract of
 # the reference's dwd_traffic_unique_visitor_detail topic.
 
-def _uv_boundary_schema():
-    from pyspark.sql.types import (
-        DateType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    return StructType(
-        [
-            StructField("mid", StringType()),
-            StructField("vc", StringType()),
-            StructField("ch", StringType()),
-            StructField("ar", StringType()),
-            StructField("is_new", StringType()),
-            StructField("event_time", TimestampType()),
-            StructField("visit_date", DateType()),
-        ]
-    )
+# DDL schemas of the append boundaries (what q2/q3 read back)
+_UV_BOUNDARY = (
+    "mid string, vc string, ch string, ar string, is_new string, "
+    "event_time timestamp, visit_date date"
+)
+_CART_FACT_BOUNDARY = "user_id string, sku_num_delta int, event_time timestamp"
+_CART_UU_BOUNDARY = "stt string, edt string, cart_add_uu_ct bigint"
 
 
 def dwd_unique_visitor_detail(page: DataFrame) -> DataFrame:
@@ -2095,7 +2083,7 @@ def dwd_unique_visitor_detail(page: DataFrame) -> DataFrame:
     a ≥24 h delay — exact daily dedup with state evicted one day after the
     day closes (the reference's 1-day state TTL, W7). Emits in arrival
     order within a day, which equals min-ts order for time-ordered sources
-    (jobs.first_per_user_day contract note).
+    read one commit per trigger (jobs.first_per_user_day contract note).
     """
     entry = page.where(F.col("page.last_page_id").isNull())
     uv = entry.select(
@@ -2139,6 +2127,32 @@ def dws_traffic_channel_window(
     )
 
 
+def upsert_store_batch(
+    batch_df: DataFrame, batch_id: int, path: str, pk: str
+) -> None:
+    """foreachBatch body of the store sinks: MERGE the batch into the
+    table at ``path`` by ``pk``, the batch id as its version (a replayed
+    batch replaces its earlier attempt). An empty batch, such as the
+    no-data trigger that only moves the watermark, commits nothing. The
+    batch is persisted for the emptiness check and the MERGE, and
+    unpersisted on every exit. The check is a count, one job over every
+    partition (which the MERGE needs anyway); ``isEmpty`` would scan
+    partitions in rounds, up to three jobs when rows are few."""
+    batch_df.persist()
+    try:
+        if batch_df.count() == 0:
+            return
+        table_store.merge_upsert(
+            batch_df.sparkSession,
+            batch_df.withColumn("ver", F.lit(batch_id)),
+            path,
+            pk=pk,
+            version_col="ver",
+        )
+    finally:
+        batch_df.unpersist()
+
+
 def traffic_stream_graph(
     spark: SparkSession,
     raw: DataFrame,
@@ -2161,8 +2175,15 @@ def traffic_stream_graph(
     Every boundary is replayable and keyed exactly like the reference's
     intermediate Kafka topics; each query owns its checkpoint, so any stage
     can crash/restart independently (the file-source metadata log resumes
-    where it stopped). Returns [q1, q2, q3]; drain with
-    ``q.processAllAvailable()`` in topological order.
+    where it stopped). q2 reads the page boundary a file, that is one
+    stateless q1 commit, per trigger, so its keep-the-first dedup sees
+    the commits in order. q3 reads the UV boundary uncapped
+    (``jobs.parquet_stream(max_files=None)``): q2 writes one file per
+    shuffle partition, and one trigger per whole commit keeps every file
+    of it from being late against a watermark its siblings moved. The
+    store sink (:func:`upsert_store_batch`) skips empty batches. Returns
+    [q1, q2, q3]; drain with ``q.processAllAvailable()`` in topological
+    order.
     """
     page_dir = os.path.join(work_dir, "dwd_traffic_page_log")
     uv_dir = os.path.join(work_dir, "dwd_traffic_uv")
@@ -2188,72 +2209,28 @@ def traffic_stream_graph(
         .start()
     )
 
-    uv = jobs.parquet_stream(spark, uv_dir, _uv_boundary_schema())
+    uv = jobs.parquet_stream(spark, uv_dir, _UV_BOUNDARY, max_files=None)
     dws = dws_traffic_channel_window(uv)
     if store_path is None:
         q3 = jobs.run_to_memory_continuous(dws, memory_table)
         return [q1, q2, q3]
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # injective composite PK: JSON keeps nulls and escapes separators,
-        # so distinct dimension tuples can never collapse to one key
-        # (concat_ws would drop NULL dims and collide on '|' in values)
-        table_store.merge_upsert(
-            batch_df.sparkSession,
-            batch_df.withColumn(
-                "pk",
-                F.to_json(
-                    F.struct("stt", "vc", "ch", "ar", "is_new"),
-                    {"ignoreNullFields": "false"},
-                ),
-            ).withColumn("ver", F.lit(batch_id)),
-            store_path,
-            pk="pk",
-            version_col="ver",
-        )
-
+    # injective composite PK: JSON keeps nulls and escapes separators, so
+    # distinct dimension tuples can never collapse to one key (concat_ws
+    # would drop NULL dims and collide on '|' in values)
+    pk = F.to_json(
+        F.struct("stt", "vc", "ch", "ar", "is_new"), {"ignoreNullFields": "false"}
+    )
     q3 = (
-        dws.writeStream.outputMode("append")
-        .foreachBatch(upsert_batch)
+        dws.withColumn("pk", pk)
+        .writeStream.outputMode("append")
+        .foreachBatch(
+            functools.partial(upsert_store_batch, path=store_path, pk="pk")
+        )
         .option("checkpointLocation", os.path.join(work_dir, "ck3"))
         .start()
     )
     return [q1, q2, q3]
-
-
-def _cart_fact_boundary_schema():
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    return StructType(
-        [
-            StructField("user_id", StringType()),
-            StructField("sku_num_delta", IntegerType()),
-            StructField("event_time", TimestampType()),
-        ]
-    )
-
-
-def _cart_uu_boundary_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("stt", StringType()),
-            StructField("edt", StringType()),
-            StructField("cart_add_uu_ct", LongType()),
-        ]
-    )
 
 
 def trade_stream_graph(
@@ -2276,10 +2253,14 @@ def trade_stream_graph(
         → ``{store_path}``
 
     Every boundary is replayable and keyed like the reference's
-    intermediate Kafka topics; each query owns its checkpoint. The ADS
-    stage runs in UPDATE mode — per batch, changed days MERGE by PK into
-    the store, so the served table always holds the latest rollup (K2's
-    upsert contract instead of append windows). Returns [q1, q2, q3].
+    intermediate Kafka topics; each query owns its checkpoint. As in the
+    traffic column, q2 reads the stateless cart-fact boundary a file (one
+    commit) per trigger, keeping its dedup in commit order, and q3 reads
+    the windowed cart-UU boundary a whole commit per trigger. The ADS
+    stage runs in UPDATE mode — per non-empty batch, changed days MERGE
+    by PK into the store, so the served table always holds the latest
+    rollup (K2's upsert contract instead of append windows). Returns
+    [q1, q2, q3].
     """
     from realtime_datawarehouse_spark.sources import maxwell as mx
 
@@ -2302,7 +2283,7 @@ def trade_stream_graph(
         .start()
     )
 
-    f = jobs.parquet_stream(spark, dwd_dir, _cart_fact_boundary_schema())
+    f = jobs.parquet_stream(spark, dwd_dir, _CART_FACT_BOUNDARY)
     firsts = jobs.first_per_user_day(
         f.withColumn("visit_date", F.to_date("event_time")),
         ts_col="event_time",
@@ -2326,25 +2307,18 @@ def trade_stream_graph(
         .start()
     )
 
-    w = jobs.parquet_stream(spark, dws_dir, _cart_uu_boundary_schema())
+    w = jobs.parquet_stream(spark, dws_dir, _CART_UU_BOUNDARY, max_files=None)
     daily = (
         w.select(F.substring("stt", 1, 10).alias("dt"), "cart_add_uu_ct")
         .groupBy("dt")
         .agg(F.sum("cart_add_uu_ct").alias("cart_add_uu"))
     )
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table_store.merge_upsert(
-            batch_df.sparkSession,
-            batch_df.withColumn("ver", F.lit(batch_id)),
-            store_path,
-            pk="dt",
-            version_col="ver",
-        )
-
     q3 = (
         daily.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
+        .foreachBatch(
+            functools.partial(upsert_store_batch, path=store_path, pk="dt")
+        )
         .option("checkpointLocation", os.path.join(work_dir, "ck3"))
         .start()
     )

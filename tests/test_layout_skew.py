@@ -350,7 +350,7 @@ def test_hive_partitioned_write_prunes_partitions(spark, tmp_path):
     assert len(glob.glob(f"{path}/dt=*")) == n_days
 
 
-def test_rebalance_narrow_scan_bytes_gate(spark):
+def test_rebalance_narrow_scan_bytes_gate(spark, monkeypatch):
     """r14: rebalance_narrow_scan(min_bytes=...) engages only when the
     optimizer's size estimate exceeds the bar — light-map-work operators
     (u1_tokenize, unigram_logprob, substring_dedup) pay the redistribution
@@ -377,3 +377,13 @@ def test_rebalance_narrow_scan_bytes_gate(spark):
     # the shared constant the light callers use exists and sits between
     # the measured sf0.1 (<1 MB) and sf1 (>2.5 MB) estimates
     assert 1 << 20 <= layout.REBALANCE_LIGHT_MIN_BYTES <= 3 << 20
+
+    # no estimate: warn, naming the failure, and fall through to the
+    # partition-count rule (even under a bar no estimate could pass)
+    def no_estimate(df):
+        raise RuntimeError("stats unavailable")
+
+    monkeypatch.setattr(layout, "_size_estimate", no_estimate)
+    with pytest.warns(UserWarning, match="RuntimeError: stats unavailable"):
+        fell = layout.rebalance_narrow_scan(narrow, min_bytes=1 << 30)
+    assert fell.rdd.getNumPartitions() == wide.rdd.getNumPartitions()

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from realtime_datawarehouse_spark.streaming import jobs, pipelines
@@ -462,11 +464,11 @@ GRAPH_LINES_B2 = [
     '{"common":{"mid":"m2","vc":"v1","ch":"web","ar":"110000","is_new":"0"},'
     '"page":{"page_id":"home"},"ts":1704067213000}',
 ]
-# two day-4 heartbeats with DISTINCT mids: both survive the UV dedup, so
-# each becomes its own file on the uv boundary — the first advances the
-# DWS watermark past day 1, the second's micro-batch emits the closed
-# day-1 windows (append-mode emission happens on the batch AFTER the
-# watermark advance)
+# two day-4 heartbeats with DISTINCT mids: both survive the UV dedup and
+# land on the uv boundary. The DWS batch that reads them advances the
+# watermark past day 1; append mode emits the closed day-1 windows on the
+# batch AFTER the advance, here Spark's no-data batch (the DWS query takes
+# every uv commit of a drain in one trigger)
 GRAPH_HEARTBEATS = [
     ['{"common":{"mid":"hb1","vc":"v9","ch":"hb","ar":"9","is_new":"0"},'
      '"page":{"page_id":"home"},"ts":1704326400000}'],
@@ -475,41 +477,15 @@ GRAPH_HEARTBEATS = [
 ]
 
 
-def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
-    """VERDICT r03 #5: SURVEY §3.4's left column as ONE running set of
-    three chained streaming queries over shared storage boundaries —
-    log split → dwd_traffic_page_log → UV detail → uv boundary → channel
-    DWS — with batch parity at the final DWS output."""
+def _batch_traffic_windows(spark, lines):
+    """Batch recomputation of the traffic column over raw log lines: parse
+    → entry pages → first view per (mid, day) → 10 s tumbling UV count per
+    dimension combination, as (stt, vc, ch, ar, is_new, uv_ct) tuples."""
     from pyspark.sql import functions as F
 
-    raw = _stream_of_lines(
-        spark,
-        tmp_path / "in",
-        [GRAPH_LINES_B1, GRAPH_LINES_B2] + GRAPH_HEARTBEATS,
-    )
-    qs = pipelines.traffic_stream_graph(
-        spark, raw, str(tmp_path / "graph"), memory_table="t_traffic_dws"
-    )
-    try:
-        # drain in topological order: each stage consumes everything its
-        # upstream committed before the next drain
-        for q in qs:
-            q.processAllAvailable()
-        got = {
-            (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
-            for r in spark.table("t_traffic_dws").collect()
-            if r.stt.startswith("2024-01-01")
-        }
-    finally:
-        for q in qs:
-            q.stop()
-
-    # batch parity over the same lines: parse → entry pages → first view
-    # per (mid, day) → 10 s tumbling UV count per dimension combination
-    all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
-    raw_b = spark.createDataFrame([(s,) for s in all_lines], "value string")
     from realtime_datawarehouse_spark.sources import log_events
 
+    raw_b = spark.createDataFrame([(s,) for s in lines], "value string")
     clean, _ = log_events.parse_with_dirty_routing(raw_b)
     page = clean.where(~F.col("start").isNotNull())
     entry = page.where(F.col("page.last_page_id").isNull())
@@ -532,7 +508,7 @@ def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
         )
         .select("mid", "visit_date", "f.*")
     )
-    expected = {
+    return {
         (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
         for r in uv.groupBy(
             F.window("event_time", "10 seconds"), "vc", "ch", "ar", "is_new"
@@ -543,12 +519,189 @@ def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
             "vc", "ch", "ar", "is_new", "uv_ct",
         )
         .collect()
-        if r.stt.startswith("2024-01-01")
+    }
+
+
+def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
+    """VERDICT r03 #5: SURVEY §3.4's left column as ONE running set of
+    three chained streaming queries over shared storage boundaries —
+    log split → dwd_traffic_page_log → UV detail → uv boundary → channel
+    DWS — with batch parity at the final DWS output."""
+    raw = _stream_of_lines(
+        spark,
+        tmp_path / "in",
+        [GRAPH_LINES_B1, GRAPH_LINES_B2] + GRAPH_HEARTBEATS,
+    )
+    qs = pipelines.traffic_stream_graph(
+        spark, raw, str(tmp_path / "graph"), memory_table="t_traffic_dws"
+    )
+    try:
+        # drain in topological order: each stage consumes everything its
+        # upstream committed before the next drain
+        for q in qs:
+            q.processAllAvailable()
+        got = {
+            (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+            for r in spark.table("t_traffic_dws").collect()
+            if r.stt.startswith("2024-01-01")
+        }
+    finally:
+        for q in qs:
+            q.stop()
+
+    all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
+    expected = {
+        w for w in _batch_traffic_windows(spark, all_lines)
+        if w[0].startswith("2024-01-01")
     }
     assert expected, "fixture must produce day-1 windows"
     assert got == expected
     # and the graph deduped: m1/m2 appear once despite re-entries
     assert sum(c for (_, _, _, _, _, c) in got) == 3  # m1, m2, m4
+
+
+def _entry_line(mid, ts_ms, ch="app"):
+    return (
+        f'{{"common":{{"mid":"{mid}","vc":"v1","ch":"{ch}","ar":"110000",'
+        f'"is_new":"1"}},"page":{{"page_id":"home"}},"ts":{ts_ms}}}'
+    )
+
+
+def _land_files(land, batches):
+    """Write each batch of raw lines as one parquet file (pyarrow, no Spark
+    job), modification times one second apart in batch order."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    land.mkdir()
+    now = time.time()
+    for n, lines in enumerate(batches):
+        f = land / f"part-{n}.parquet"
+        pq.write_table(pa.table({"value": lines}), f)
+        os.utime(f, (now + n, now + n))
+    return str(land)
+
+
+def test_traffic_graph_keeps_rows_of_a_batch_wider_than_the_watermark(
+    spark, tmp_path
+):
+    """One raw micro-batch spanning 2 min of event time (far wider than
+    the 3 s DWS watermark delay), with enough distinct mids that the UV
+    query writes one boundary file per shuffle partition. The DWS query
+    must take that whole commit in one trigger: read a file at a time,
+    the first file moves the watermark past the others and their rows
+    are dropped as late, losing closed windows from the served table."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    t0 = 1704067200000  # 2024-01-01 00:00:00 UTC
+    burst = [
+        _entry_line(f"m{i}", t0 + i * 1250, ("app", "web")[i % 2])
+        for i in range(96)
+    ]
+    heartbeat = [_entry_line("hb", t0 + 3 * 86_400_000, "hb")]
+    land = _land_files(tmp_path / "in", [burst, heartbeat])
+    raw = spark.readStream.schema("value string").parquet(land)
+    store = str(tmp_path / "store")
+    qs = pipelines.traffic_stream_graph(
+        spark, raw, str(tmp_path / "graph"), store_path=store
+    )
+    try:
+        for q in qs:
+            q.processAllAvailable()
+        late = sum(
+            op.get("numRowsDroppedByWatermark", 0)
+            for q in qs
+            for p in q.recentProgress
+            for op in p.get("stateOperators", [])
+        )
+    finally:
+        for q in qs:
+            q.stop()
+    served = {
+        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+        for r in ts.read_state(spark, store).collect()
+    }
+    want = {
+        w for w in _batch_traffic_windows(spark, burst + heartbeat)
+        if w[0].startswith("2024-01-01")
+    }
+    assert len(want) == 24  # 12 closed 10 s windows × 2 channels
+    assert late == 0
+    assert {w for w in served if w[0].startswith("2024-01-01")} == want
+
+
+def test_traffic_graph_uv_dedup_keeps_the_earliest_view_of_a_backlog(
+    spark, tmp_path
+):
+    """Two page-boundary commits wait for the UV query, the later and
+    larger one repeating a mid of the first. The UV dedup keeps the first
+    view per (mid, day), so the graph must read that boundary in commit
+    order: the earliest view (its channel and time) survives, whichever
+    file a scan of both commits would take first."""
+    t0 = 1704067200000  # 2024-01-01 00:00:00 UTC
+    early = [_entry_line("mx", t0, "app")]
+    late = [_entry_line(f"m{i}", t0 + 1000 + i, "web") for i in range(64)]
+    late.append(_entry_line("mx", t0 + 5000, "web"))
+    land = _land_files(tmp_path / "in", [early, late])
+    raw = jobs.parquet_stream(spark, land, "value string")
+    work = tmp_path / "graph"
+    # q1 of the graph, run ahead alone: both commits are on the page
+    # boundary before the graph (resuming q1 from this checkpoint) starts
+    backlog = (
+        pipelines.dwd_log_split(raw)["page"]
+        .writeStream.format("parquet")
+        .option("path", str(work / "dwd_traffic_page_log"))
+        .option("checkpointLocation", str(work / "ck1"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        backlog.processAllAvailable()
+    finally:
+        backlog.stop()
+    qs = pipelines.traffic_stream_graph(
+        spark, raw, str(work), memory_table="t_traffic_uv_order"
+    )
+    try:
+        for q in qs[:2]:
+            q.processAllAvailable()
+    finally:
+        for q in qs:
+            q.stop()
+    uv = spark.read.parquet(str(work / "dwd_traffic_uv"))
+    assert uv.count() == 65
+    (mx,) = uv.where("mid = 'mx'").collect()
+    assert (mx.ch, mx.event_time.second) == ("app", 0)
+
+
+def test_upsert_store_batch_commits_only_non_empty_batches(spark, tmp_path):
+    """The store sinks' shared foreachBatch body: an empty batch (a
+    watermark-only trigger) commits no version, a non-empty batch commits
+    exactly one, and no persisted batch outlives the call."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame([("a", 1), ("b", 2)], "dt string, n int")
+
+    def persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = persisted()
+    pipelines.upsert_store_batch(rows.limit(0), 0, path, "dt")
+    assert ts.current_version(path) is None
+    pipelines.upsert_store_batch(rows, 1, path, "dt")
+    v1 = ts.current_version(path)
+    assert v1 is not None and ts.list_versions(path) == [v1]
+    pipelines.upsert_store_batch(rows.limit(0), 2, path, "dt")
+    assert ts.current_version(path) == v1
+    assert ts.list_versions(path) == [v1]
+    assert {(r.dt, r.n, r.ver) for r in ts.read_state(spark, path).collect()} == {
+        ("a", 1, 1),
+        ("b", 2, 1),
+    }
+    assert persisted() == before
 
 
 def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
@@ -560,7 +713,6 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from realtime_datawarehouse_spark.operators import table_store as ts
-    from realtime_datawarehouse_spark.sources import log_events
     from realtime_datawarehouse_spark.sources import maxwell as mx
 
     log_raw = _stream_of_lines(
@@ -603,41 +755,9 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
         if r.stt.startswith("2024-01-01")
     }
     all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
-    raw_b = spark.createDataFrame([(s,) for s in all_lines], "value string")
-    clean, _ = log_events.parse_with_dirty_routing(raw_b)
-    page = clean.where(~F.col("start").isNotNull())
-    entry = page.where(F.col("page.last_page_id").isNull())
-    uv = (
-        entry.select(
-            F.col("common.mid").alias("mid"),
-            F.col("common.vc").alias("vc"),
-            F.col("common.ch").alias("ch"),
-            F.col("common.ar").alias("ar"),
-            F.col("common.is_new").alias("is_new"),
-            F.timestamp_millis(F.col("ts")).alias("event_time"),
-        )
-        .withColumn("visit_date", F.to_date("event_time"))
-        .groupBy("mid", "visit_date")
-        .agg(
-            F.min_by(
-                F.struct("vc", "ch", "ar", "is_new", "event_time"),
-                "event_time",
-            ).alias("f")
-        )
-        .select("mid", "visit_date", "f.*")
-    )
     traffic_want = {
-        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
-        for r in uv.groupBy(
-            F.window("event_time", "10 seconds"), "vc", "ch", "ar", "is_new"
-        )
-        .agg(F.count("*").alias("uv_ct"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            "vc", "ch", "ar", "is_new", "uv_ct",
-        )
-        .collect()
-        if r.stt.startswith("2024-01-01")
+        w for w in _batch_traffic_windows(spark, all_lines)
+        if w[0].startswith("2024-01-01")
     }
     assert traffic_want, "fixture must produce closed day-1 windows"
     assert traffic_served == traffic_want
